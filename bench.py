@@ -254,6 +254,7 @@ def main() -> None:
     # property). Additions only: `value` above stays the
     # BASELINE-comparable pass-1 cold total.
     iso: dict[str, float] = {}
+    iso_errors: dict[str, str] = {}
     for name in HEADLINE + EXTENDED:
         if timings.get(name, -1.0) < 0:
             continue
@@ -265,8 +266,8 @@ def main() -> None:
         try:
             _force(qs[name](spark, sf_dir))
             iso[name] = round(time.perf_counter() - t0, 3)
-        except Exception:
-            pass
+        except Exception as e:  # a cache-cold-only failure stays visible
+            iso_errors[name] = f"{type(e).__name__}: {e}"[:200]
 
     # headline value = the pass-1 cold total (BASELINE-comparable);
     # the min-of-2 is adjudication context, not the headline (see the
@@ -321,6 +322,8 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
+    if iso_errors:
+        out["errors_standalone"] = iso_errors
     # Full detail first, then a COMPACT summary as the FINAL line: the
     # driver's tail capture keeps only the last ~2,000 chars, and the
     # full line (per-query cold+warm maps) outgrew that in r10 —

@@ -9,6 +9,13 @@ import pytest
 
 from tests.conftest import SF_ORACLE
 from vector_db_setup_spark import queries as q
+from vector_db_setup_spark.plans.inspect import (
+    has_broadcast_join,
+    has_take_ordered,
+    n_exchanges,
+    scan_pushed_filters,
+)
+from vector_db_setup_spark.sources.registry import load_table
 
 
 @pytest.fixture(autouse=True)
@@ -23,13 +30,6 @@ def _cold_persist_cache(spark):
     the deterministic cold plan."""
     q.clear_persist_cache(spark)
     yield
-from vector_db_setup_spark.plans.inspect import (
-    has_broadcast_join,
-    has_take_ordered,
-    n_exchanges,
-    scan_pushed_filters,
-)
-from vector_db_setup_spark.sources.registry import load_table
 
 
 def test_flagship_knn_is_shuffle_free(spark):

@@ -132,11 +132,11 @@ def test_batch_knn_blocked_fallback_schema_with_custom_query_id_col(spark):
 
 
 def test_no_unguarded_full_corpus_collect():
-    """Regression tripwire: every .collect() in operators/ must be
-    size-bounded — either behind a _count_capped guard (similarity/
-    graph kernels) or with a .limit(k) IN THE SAME CALL CHAIN (checked
-    via ast, so an unrelated .limit( nearby can't mask an unbounded
-    collect)."""
+    """Regression tripwire: every .collect() or .toPandas() in
+    operators/ must be size-bounded — either behind a _count_capped
+    guard (similarity/graph kernels) or with a .limit(k) IN THE SAME
+    CALL CHAIN (checked via ast, so an unrelated .limit( nearby can't
+    mask an unbounded collect)."""
     import ast
     import pathlib
 
@@ -153,7 +153,7 @@ def test_no_unguarded_full_corpus_collect():
             if not (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "collect"
+                and node.func.attr in ("collect", "toPandas")
             ):
                 continue
             cur, bounded = node.func.value, False
@@ -170,8 +170,8 @@ def test_no_unguarded_full_corpus_collect():
                 else:
                     break
             assert bounded, (
-                f"{f}:{node.lineno}: .collect() without a _count_capped "
-                "guard or a .limit(k) in its own call chain"
+                f"{f}:{node.lineno}: .{node.func.attr}() without a "
+                "_count_capped guard or a .limit(k) in its own call chain"
             )
 
 

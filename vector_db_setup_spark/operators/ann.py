@@ -7,11 +7,13 @@ builds via DataFrame ops — online ANN serving stays out of Spark
 
 Two index families, both as plain DataFrame transforms:
 
-- **IVF** (inverted file): KMeans centroids (MLlib, seeded) → assign each
-  vector to its nearest centroid → write partitioned by cluster id.
-  Search probes the `nprobe` nearest centroids and scans only those
-  partitions — at 100 TB, partition pruning on `cluster_id` turns a full
-  corpus scan into reading nprobe/k of the data.
+- **IVF** (inverted file): KMeans centroids (trained on the driver over
+  a bounded, seeded sample, as FAISS does) → assign each vector to its
+  nearest centroid → write partitioned by cluster id. Search probes the
+  `nprobe` nearest centroids and scans only those partitions — at
+  100 TB, partition pruning on `cluster_id` turns a full corpus scan
+  into reading nprobe/k of the data. Batch probes are routed on the
+  driver and scored by the same GEMM kernel as exact batch KNN.
 - **Random-projection LSH**: seeded Gaussian hyperplanes → sign-bit
   bucket key per vector. Equal keys = candidate bucket; search/dedup
   happens within buckets. Plane generation is a numpy RNG with a fixed
@@ -24,11 +26,24 @@ locality (bucketed/partitioned storage), not a special runtime.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_setup_spark.functions.vector import l2_distance_sq, vector_literal
 from vector_db_setup_spark.operators.knn import knn_topk
+from vector_db_setup_spark.operators.similarity import (
+    MAX_QUERY_ROWS,
+    CorpusTooLargeError,
+    l2_topk_candidates,
+    rank_topk,
+    usable_rows,
+)
+
+
+# FAISS's bound on training points per centroid: the driver-side
+# sample stays at most 256·k vectors whatever the corpus size
+_KMEANS_POINTS_PER_CENTROID = 256
 
 
 def kmeans_centroids(
@@ -38,14 +53,62 @@ def kmeans_centroids(
     seed: int = 42,
     max_iter: int = 20,
 ) -> np.ndarray:
-    """Train IVF centroids with MLlib KMeans (seeded, deterministic for a
-    fixed dataset + seed). Returns a k×d numpy array."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """Train IVF centroids on the driver: seeded k-means++ and then
+    ``max_iter`` Lloyd steps in float64 over a sample of at most 256·k
+    vectors. Returns a k×d numpy array.
 
-    ds = emb.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(ds)
-    return np.array([np.asarray(c) for c in model.clusterCenters()])
+    The sample is one Spark job: the non-NULL vectors ordered by
+    ``xxhash64(vec, seed)`` (then by the vector), first 256·k. So it
+    depends only on the data and the seed, not on partitioning or row
+    order. Sampled vectors with a non-finite element or a width other
+    than the most common one are left out. With fewer distinct vectors
+    than k, one centroid per distinct vector is returned (fewer than k
+    rows), as MLlib KMeans did."""
+    vec = F.col(vec_col)
+    pdf = (
+        emb.select(vec.alias("v"))
+        .where(vec.isNotNull())
+        .orderBy(F.xxhash64("v", F.lit(seed)), "v")
+        .limit(_KMEANS_POINTS_PER_CENTROID * k)
+        .toPandas()
+    )
+    vecs = [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
+    widths, counts = np.unique([len(v) for v in vecs], return_counts=True)
+    dim = widths[counts.argmax()] if len(widths) else 0
+    x = np.array([v for v in vecs if len(v) == dim and np.isfinite(v).all()])
+    if not len(x):
+        raise ValueError(f"kmeans_centroids: no usable {vec_col!r} to train on")
+    # row order of the sample must not matter either
+    x = x[np.lexsort(x.T[::-1])]
+    rng = np.random.default_rng(seed)
+    cents = _kmeans_pp(x, k, rng)
+    xn2 = (x**2).sum(axis=1)
+    labels = None
+    for _ in range(max_iter):
+        d2 = xn2[:, None] - 2.0 * (x @ cents.T) + (cents**2).sum(axis=1)
+        new = d2.argmin(axis=1)
+        if labels is not None and np.array_equal(new, labels):
+            break
+        labels = new
+        onehot = np.zeros((len(cents), len(x)))
+        onehot[labels, np.arange(len(x))] = 1.0
+        sizes = onehot.sum(axis=1)
+        filled = sizes > 0  # an emptied cluster keeps its centroid
+        cents[filled] = (onehot @ x)[filled] / sizes[filled, None]
+    return cents
+
+
+def _kmeans_pp(x: np.ndarray, k: int, rng) -> np.ndarray:
+    """k-means++ seeding: each next centroid is a sample row drawn with
+    probability ∝ its squared distance to the nearest chosen one. Stops
+    early once every row coincides with a chosen centroid."""
+    chosen = [int(rng.integers(len(x)))]
+    d2 = ((x - x[chosen[0]]) ** 2).sum(axis=1)
+    while len(chosen) < k and d2.sum() > 0.0:
+        i = int(rng.choice(len(x), p=d2 / d2.sum()))
+        chosen.append(i)
+        d2 = np.minimum(d2, ((x - x[i]) ** 2).sum(axis=1))
+    return x[chosen]
 
 
 def _refuse_assign_clash(fn: str, emb: DataFrame, dist_col) -> None:
@@ -101,9 +164,12 @@ def ivf_assign_gemm(
     vec_col: str = "embedding",
     dist_col: str | None = None,
 ) -> DataFrame:
-    """`ivf_assign` for LARGE k — the same contract (nearest-centroid
-    `cluster_id`, ties to the lowest id, optional L2 `dist_col`),
-    computed as one Arrow-batched GEMM instead of a per-row expression.
+    """`ivf_assign` as one Arrow-batched GEMM — the same contract
+    (nearest-centroid `cluster_id`, ties to the lowest id, optional L2
+    `dist_col`), with the centroids in the kernel's closure instead of a
+    k×d literal in the plan. The IVF index build and maintenance
+    (ann_index) use it at every k: planning the literal argmin cost
+    seconds per call at 768-d.
 
     Why both exist: the native-expression form evaluates k distance
     expressions PER ROW — O(N·k·d) in codegen scalar land, perfect at
@@ -144,11 +210,7 @@ def ivf_assign_gemm(
             # and is excluded from probes, it must not np.stack-crash
             # the whole maintenance job (k-dependent behavior: the
             # same batch was tolerated at k<=16 and aborted at k>16)
-            ok = np.fromiter(
-                (v is not None and len(v) == dim for v in vecs),
-                dtype=bool,
-                count=len(vecs),
-            )
+            ok = usable_rows(vecs, dim)
             pdf = pdf.copy()
             cid_out = np.full(len(pdf), None, dtype=object)
             dist_out = np.full(len(pdf), None, dtype=object)
@@ -187,8 +249,9 @@ def ivf_assign_auto(
     """Dispatch between the two assignment forms on k: the native
     expression below 16 centroids (SQL-replayable, zero Python), the
     Arrow GEMM above (the large-k scale path — see ivf_assign_gemm's
-    measurement). Every corpus-sized assignment should come through
-    here; oracled queries call ivf_assign directly so their plan is
+    measurement). The IVF index build and maintenance in ann_index call
+    ivf_assign_gemm directly, so no k×d centroid literal is planned
+    there; oracled queries call ivf_assign directly so their plan is
     the one their SQL replays."""
     if len(centroids) > _GEMM_ASSIGN_K:
         return ivf_assign_gemm(emb, centroids, vec_col, dist_col)
@@ -225,7 +288,8 @@ def probe_ids(
         score = cents @ q
     else:
         raise ValueError(f"unknown metric: {metric}")
-    return [int(i) for i in np.argsort(-score)[:nprobe]]
+    # stable: centroids tied on the score go to the lower cluster id
+    return [int(i) for i in np.argsort(-score, kind="stable")[:nprobe]]
 
 
 def ivf_search(
@@ -271,52 +335,72 @@ def ivf_search_batch(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Batch ANN search: every query probes its ``nprobe`` nearest
-    clusters — the scale form of ``batch_knn_join`` (exact Q×N) when N
-    is IVF-indexed.
+    clusters — the scale form of ``batch_knn_blocked`` (exact Q×N) when
+    N is IVF-indexed. Returns (``qid_col``, ``id_col``, distance).
 
-    Shape: each query row explodes to ``nprobe`` (query, cluster_id)
-    probe rows via a codegen argsort over the literal centroid array
-    (no Python, no driver round-trip per query — unlike single-query
-    ``ivf_search``, which sorts centroids in numpy). The probe table
-    equi-joins the index on cluster_id — over an ``ivf_write`` layout
-    the join's cluster set prunes partitions — then exact per-pair L2 +
-    one window top-k per query. Cost: |Q|·nprobe·avg_cluster_size
-    pairs instead of |Q|·N; recall is governed by nprobe (measured in
-    tests vs the exact join).
+    The queries are collected (at most ``MAX_QUERY_ROWS``; above that
+    ``CorpusTooLargeError`` asks the caller to split the batch) and
+    routed on the driver by ``probe_ids``' L2 rule, ties to the lower
+    cluster id. The queries and a query×cluster probe mask are
+    broadcast as numpy; the scan reads only the probed ``cluster_id``s
+    (partition pruning over an ``ivf_write`` or index layout) and one
+    ``mapInPandas`` GEMM scores each row against just the queries that
+    probe its cluster. Candidates and the final (distance, id) rank
+    are ``batch_knn_blocked``'s, so at nprobe = #clusters both return
+    the same rows. Queries or rows with a NULL vector or a width other
+    than the centroids' are left out. Cost: |Q|·nprobe·avg_cluster_size
+    distances instead of |Q|·N; recall is governed by nprobe (measured
+    in tests vs the exact search).
     """
-    from pyspark.sql import Window
+    from pyspark.sql import types as T
 
-    cents = F.array(*[vector_literal(c) for c in centroids])
-    # per-query nprobe nearest centroid ids: sort (dist, idx) structs
-    scored = F.transform(
-        cents,
-        lambda c, i: F.struct(
-            l2_distance_sq(F.col(qvec_col), c).alias("d"),
-            i.alias("cid"),
-        ),
+    spark = assigned.sparkSession
+    cents = np.asarray(centroids, dtype=np.float64)
+    schema = T.StructType(
+        [
+            T.StructField(qid_col, queries.schema[qid_col].dataType),
+            T.StructField(id_col, assigned.schema[id_col].dataType),
+            T.StructField("distance", T.DoubleType()),
+        ]
     )
-    probes = F.slice(F.array_sort(scored), 1, nprobe)
-    q = queries.select(
-        F.col(qid_col),
-        F.col(qvec_col).alias("__qvec"),
-        F.explode(probes).alias("p"),
-    ).select(qid_col, "__qvec", F.col("p.cid").alias("cluster_id"))
-    joined = q.join(assigned, "cluster_id")
-    from vector_db_setup_spark.functions.vector import l2_distance
+    qpdf = (
+        queries.select(qid_col, qvec_col).limit(MAX_QUERY_ROWS + 1).toPandas()
+    )
+    if len(qpdf) > MAX_QUERY_ROWS:
+        raise CorpusTooLargeError(
+            f"ivf_search_batch: more than {MAX_QUERY_ROWS} queries; "
+            "split the batch"
+        )
+    qpdf = qpdf[usable_rows(qpdf[qvec_col].to_numpy(), cents.shape[1])]
+    if qpdf.empty:
+        return spark.createDataFrame([], schema)
+    qids = qpdf[qid_col].to_numpy()
+    qmat = np.stack(qpdf[qvec_col].to_numpy()).astype(np.float64)
+    mask = np.zeros((len(qmat), len(cents)), dtype=bool)
+    for i, q in enumerate(qmat):
+        mask[i, probe_ids(cents, q, nprobe)] = True
+    sc = spark.sparkContext
+    b_qids, b_qmat, b_mask = sc.broadcast(qids), sc.broadcast(qmat), sc.broadcast(mask)
 
-    scored_pairs = joined.select(
-        qid_col,
-        id_col,
-        l2_distance(F.col("__qvec"), F.col(vec_col)).alias("distance"),
+    def _probe(batches):
+        for pdf in batches:
+            cids = pdf["cluster_id"].to_numpy()
+            ids, vecs = pdf[id_col].to_numpy(), pdf[vec_col].to_numpy()
+            for c in np.unique(cids):
+                rows, probing = cids == c, b_mask.value[:, c]
+                q, i, d = l2_topk_candidates(
+                    ids[rows], vecs[rows],
+                    b_qids.value[probing], b_qmat.value[probing], k,
+                )
+                yield pd.DataFrame({qid_col: q, id_col: i, "distance": d})
+
+    probed = [int(c) for c in np.nonzero(mask.any(axis=0))[0]]
+    local = (
+        assigned.filter(F.col("cluster_id").isin(probed))
+        .select(id_col, vec_col, "cluster_id")
+        .mapInPandas(_probe, schema=schema)
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored_pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return rank_topk(local, qid_col, id_col, "distance", k)
 
 
 def random_hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:

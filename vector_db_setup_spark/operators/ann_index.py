@@ -31,8 +31,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_db_setup_spark.operators.ann import (
-    ivf_assign_auto,
+from vector_db_setup_spark.operators.ann import (  # noqa: F401
+    ivf_assign_auto,  # not called here; perfbench spans this name
+    ivf_assign_gemm,
     kmeans_centroids,
 )
 from vector_db_setup_spark.sources.snapshot_table import (
@@ -56,10 +57,13 @@ def build_ivf_index(
     ``extra_meta`` merges into the marker meta (maintainer cursors,
     audit fields) without touching the index's own keys.
 
-    Offline batch shape: seeded KMeans (deterministic per data+seed),
-    map-stage assignment, one partitioned write, one commit. The
-    centroids travel in the marker meta (k×d doubles — KBs), so a
-    search needs no artifact beyond the table itself.
+    Offline batch shape: seeded KMeans on the driver over a bounded
+    sample (``kmeans_centroids``; deterministic per data+seed), one
+    Arrow GEMM assignment stage with the centroids in the kernel's
+    closure (``ivf_assign_gemm``; no centroid literal in the plan), one
+    partitioned write, one commit. The centroids travel in the marker
+    meta (k×d doubles — KBs), so a search needs no artifact beyond the
+    table itself.
 
     The marker also records ``mean_assign_dist`` — the mean L2
     distance of the build's vectors to their assigned centroid (the
@@ -73,7 +77,7 @@ def build_ivf_index(
     # corpus-sized assignment — without the cache the dominant cost of
     # every rebuild runs twice (append_to_ivf_index already persists
     # its batch for the same reason; the corpus path matters more)
-    assigned = ivf_assign_auto(
+    assigned = ivf_assign_gemm(
         emb, cents, vec_col=vec_col, dist_col="_adist"
     ).persist()
     try:
@@ -205,14 +209,13 @@ def search_ivf_index_batch(
     fs=None,
 ) -> DataFrame:
     """Batch ANN search against a PINNED index version: the versioned
-    twin of ann.ivf_search_batch — every query explodes to its nprobe
-    nearest clusters via a codegen argsort over the marker's literal
-    centroid array (no driver round-trip per query), equi-joins the
-    pinned partitioned layout on cluster_id, exact per-pair L2, one
-    window top-k per query. A concurrent rebuild landing a new
-    version is invisible to an in-flight batch (the scan is pinned),
-    which is what makes nightly eval sweeps safe to run during index
-    refresh."""
+    twin of ann.ivf_search_batch — the queries are routed on the driver
+    by the marker's centroids, and one GEMM stage scores each row of
+    the probed ``cluster_id`` partitions of the pinned layout against
+    the queries that probe its cluster, then one window top-k per
+    query. A concurrent rebuild landing a new version is invisible to
+    an in-flight batch (the scan is pinned), which is what makes
+    nightly eval sweeps safe to run during index refresh."""
     from vector_db_setup_spark.operators.ann import ivf_search_batch
 
     v, meta, cents = _resolve_ivf(spark, base, version, fs)
@@ -293,7 +296,7 @@ def append_to_ivf_index(
             )
         cents = np.asarray(meta["centroids"], dtype=np.float64)
         vec_col = meta["vec_col"]
-        assigned = ivf_assign_auto(
+        assigned = ivf_assign_gemm(
             new_emb, cents, vec_col=vec_col, dist_col="_adist"
         )
         # persist: the drift agg below and append_snapshot's write both
@@ -393,7 +396,7 @@ def merge_into_ivf_index(
             )
         cents = np.asarray(meta["centroids"], dtype=np.float64)
         vec_col = meta["vec_col"]
-        assigned = ivf_assign_auto(
+        assigned = ivf_assign_gemm(
             changed_emb, cents, vec_col=vec_col, dist_col="_adist"
         )
         assigned.persist()

@@ -127,8 +127,8 @@ def dequantize_expr(codes_col: str = "codes"):
 # asymmetric distance computation (ADC): per query, one m x ksub
 # lookup table of exact sub-distances, then distance ≈ sum of m table
 # lookups — a pure codegen aggregate over the codes, no vector math
-# per row. Training is seeded MLlib KMeans per subspace (batch,
-# offline — same contract as the IVF centroids above it).
+# per row. Training is seeded KMeans per subspace (batch, offline —
+# the same kmeans_centroids as the IVF centroids).
 # ---------------------------------------------------------------------------
 
 
@@ -142,8 +142,8 @@ def pq_train(
 ):
     """Train m sub-quantizer codebooks of ksub centroids each over
     contiguous d/m-dim sub-vectors. Returns numpy (m, ksub, dsub).
-    One seeded MLlib KMeans fit per subspace — deterministic for a
-    fixed dataset + seed."""
+    One seeded ``kmeans_centroids`` fit per subspace — deterministic
+    for a fixed dataset + seed."""
     import numpy as np
 
     from vector_db_setup_spark.operators.ann import kmeans_centroids

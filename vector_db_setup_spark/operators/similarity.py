@@ -610,6 +610,82 @@ def cosine_topk_pairs_blocked(
     ).limit(k)
 
 
+# the query-side collect cap of the broadcast batch-KNN kernels
+# (batch_knn_blocked, ann.ivf_search_batch)
+MAX_QUERY_ROWS = 100_000
+
+# a row stays a candidate while its expanded d² is within this relative
+# slack of the k-th: the expansion's rounding scales with |x|²+|q|², so
+# rows tied at the k-th (duplicate vectors) are never cut by it
+_TIE_RTOL = 1e-9
+
+
+def usable_rows(vecs: np.ndarray, dim: int) -> np.ndarray:
+    """Mask of the vectors a GEMM kernel can score: not NULL and
+    ``dim`` wide. The others are left out, never np.stack-crash a
+    whole job."""
+    return np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), dtype=bool, count=len(vecs)
+    )
+
+
+def l2_topk_candidates(
+    ids: np.ndarray, vecs: np.ndarray, qids: np.ndarray, qmat: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One block of corpus rows' candidates for each query's global
+    (distance, id) top-k — the L2 kernel the broadcast batch searches
+    share.
+
+    ``vecs`` is an object array of vectors; NULL ones and those whose
+    width differs from the queries' are left out. Squared distances
+    come from one GEMM (|x|²+|q|²−2x·q) per chunk of queries. Every row
+    within ``_TIE_RTOL`` of a query's k-th expanded d² (relative to the
+    larger of that d² and the norms it cancels) is kept, so every tie at
+    the k-th reaches the caller's (distance, id) rank. The distance of
+    each kept row is then computed directly as sqrt(sum((x−q)²)), so
+    the rank orders true distances, not the expansion's cancellation
+    error. Returns (query ids, ids, distances)."""
+    dim = qmat.shape[1]
+    ok = usable_rows(vecs, dim)
+    if not ok.any() or not len(qids):
+        return qids[:0], np.asarray(ids)[:0], np.empty(0)
+    mat = np.stack(vecs[ok]).astype(np.float64)
+    ids = np.asarray(ids)[ok]
+    cn2 = (mat**2).sum(axis=1)
+    # bound both the m×chunk d² block and the kept rows' differences
+    step = max(1, _GEMM_CELLS // max(len(mat), min(len(mat), k) * dim))
+    out_q, out_id, out_d = [], [], []
+    for lo in range(0, len(qids), step):
+        qm = qmat[lo : lo + step]
+        qn2 = (qm**2).sum(axis=1)
+        d2 = cn2[:, None] + qn2[None, :] - 2.0 * (mat @ qm.T)
+        if len(mat) > k:
+            kth = np.partition(d2, k - 1, axis=0)[k - 1]
+            slack = _TIE_RTOL * (np.abs(kth) + qn2 + cn2.max())
+            r, c = np.nonzero(d2 <= kth + slack)
+        else:
+            r, c = np.divmod(np.arange(d2.size), d2.shape[1])
+        out_q.append(qids[lo + c])
+        out_id.append(ids[r])
+        out_d.append(np.sqrt(((mat[r] - qm[c]) ** 2).sum(axis=1)))
+    return np.concatenate(out_q), np.concatenate(out_id), np.concatenate(out_d)
+
+
+def rank_topk(
+    local: DataFrame, key_col: str, id_col: str, dist_col: str, k: int
+) -> DataFrame:
+    """Each key's k rows with the smallest (distance, id) — the final
+    merge of the candidates ``l2_topk_candidates`` emits per block."""
+    w = Window.partitionBy(key_col).orderBy(
+        F.col(dist_col).asc(), F.col(id_col).asc()
+    )
+    return (
+        local.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
 def batch_knn_blocked(
     queries: DataFrame,
     corpus: DataFrame,
@@ -618,12 +694,12 @@ def batch_knn_blocked(
     query_vec_col: str = "qvec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_query_rows: int = 100_000,
+    max_query_rows: int = MAX_QUERY_ROWS,
     on_oversize: str = "fallback",
 ) -> DataFrame:
     """Batch KNN, two-phase: each corpus partition computes distances to
-    ALL queries in one GEMM (|a-b|^2 = |a|^2+|b|^2-2a.b) and emits only
-    its local top-k per query; a final per-query rank sees just
+    ALL queries in one GEMM and emits only its local top-k per query
+    (``l2_topk_candidates``); a final per-query rank sees just
     partitions x Q x k candidate rows instead of N x Q scored rows.
 
     This is the crossJoin+window formulation's scale path: the shuffle
@@ -631,7 +707,9 @@ def batch_knn_blocked(
     side is collected+broadcast — small by definition of batch KNN — and
     guarded: past ``max_query_rows`` the operator either falls back to
     the pure-DataFrame ``batch_knn_join`` (on_oversize="fallback") or
-    raises (on_oversize="error") instead of OOMing the driver."""
+    raises (on_oversize="error") instead of OOMing the driver. Corpus
+    rows with a NULL vector or a width other than the queries' are left
+    out."""
     spark = corpus.sparkSession
     nq = _count_capped(queries, max_query_rows)
     if nq > max_query_rows:
@@ -667,55 +745,18 @@ def batch_knn_blocked(
     b_qids = spark.sparkContext.broadcast(q_ids)
     b_qmat = spark.sparkContext.broadcast(q_mat)
 
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("dist", DoubleType()),
-        ]
-    )
-
     def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qm = b_qmat.value
-        qi = b_qids.value
-        q_norm2 = (qm**2).sum(axis=1)
         for pdf in batches:
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            c_norm2 = (cm**2).sum(axis=1)
-            # m×Q squared distances via GEMM
-            d2 = c_norm2[:, None] + q_norm2[None, :] - 2.0 * (cm @ qm.T)
-            np.maximum(d2, 0.0, out=d2)
-            out_q, out_id, out_d = [], [], []
-            for j in range(len(qi)):
-                col = d2[:, j]
-                if len(col) > k:
-                    # keep EVERY candidate tied with the k-th distance
-                    # (argpartition alone cuts ties arbitrarily; the
-                    # global (dist, id) window then ranks a survivor
-                    # set that may have dropped the smaller-id tie —
-                    # same boundary rule as _topk_pairs above, so this
-                    # path stays result-equivalent with batch_knn_join)
-                    kth = np.partition(col, k - 1)[k - 1]
-                    top = np.nonzero(col <= kth)[0]
-                else:
-                    top = np.arange(len(col))
-                out_q.extend([qi[j]] * len(top))
-                out_id.extend(ids[top])
-                out_d.extend(np.sqrt(col[top]))
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_id, "dist": out_d}
+            q, ids, d = l2_topk_candidates(
+                pdf[id_col].to_numpy(), pdf[vec_col].to_numpy(),
+                b_qids.value, b_qmat.value, k,
             )
+            yield pd.DataFrame({"query_id": q, id_col: ids, "dist": d})
 
-    local = corpus.select(id_col, vec_col).mapInPandas(_chunk, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
+    local = corpus.select(id_col, vec_col).mapInPandas(
+        _chunk, schema=spark_schema
     )
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return rank_topk(local, "query_id", id_col, "dist", k)
 
 
 def bipartite_max_cosine_lsh(

@@ -574,16 +574,16 @@ def ivf_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ANN search through the IVF routing path
     (operators/ann.ivf_search_batch) in its EXACT configuration
     (nprobe = #clusters), which must reproduce the brute-force oracle
-    row-for-row — so the probe routing (codegen per-query centroid
-    argsort + explode), the cluster equi-join, and the per-query
-    window top-k are all value-checked; the approximate configurations
-    differ only in the nprobe slice and are recall-tested
-    (tests/test_ann.py). Centroid training is seeded KMeans at query
-    construction (deterministic for a fixed fixture + seed). At scale:
-    |Q|·nprobe·cluster pairs instead of |Q|·N, partition pruning over
-    an ivf_write layout."""
+    row-for-row — so the driver-side probe routing, the probed-cluster
+    GEMM kernel and the per-query window top-k are all value-checked;
+    the approximate configurations differ only in the probe mask and
+    are recall-tested (tests/test_ann.py). Centroid training is seeded
+    KMeans at query construction (deterministic for a fixed fixture +
+    seed); the assignment is the GEMM form, so no centroid literal is
+    planned. At scale: |Q|·nprobe·cluster distances instead of |Q|·N,
+    partition pruning over an ivf_write layout."""
     from vector_db_setup_spark.operators.ann import (
-        ivf_assign,
+        ivf_assign_gemm,
         ivf_search_batch,
         kmeans_centroids,
     )
@@ -594,7 +594,8 @@ def ivf_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = ivf_search_batch(
-        queries_df, ivf_assign(embs, cents), cents, k=3, nprobe=len(cents)
+        queries_df, ivf_assign_gemm(embs, cents), cents, k=3,
+        nprobe=len(cents),
     )
     return out.select(
         "query_id", "vec_id", F.round("distance", 6).alias("distance")
@@ -7066,7 +7067,7 @@ def pq_adc_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("pq_knn")  # rows-only: MLlib KMeans codebooks (recall tested)
+@register("pq_knn")  # rows-only: KMeans codebooks (recall tested)
 def pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KNN over product-quantized codes (operators/quantize PQ section):
     8 sub-quantizers x 16 centroids turn each 64-d vector into 8 small
@@ -7076,8 +7077,9 @@ def pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame ops. rerank=8 here: the fixture embeddings are
     near-uniform (distances concentrate, the hardest case for PQ), and
     the margin is the recall lever — measured 7/10 at rerank=4, 9/10
-    at rerank=8 on this data. Rows-only: the codebooks come from seeded MLlib
-    KMeans (iterative, engine-specific); recall and exactness of the
+    at rerank=8 on this data (with the earlier MLlib codebooks).
+    Rows-only: the codebooks come from seeded KMeans (iterative,
+    engine-specific); recall and exactness of the
     returned distances are pinned in tests. Codebooks + coded table
     are memoized per session (training is the offline step at scale)."""
     from vector_db_setup_spark.operators.quantize import (
@@ -7104,7 +7106,7 @@ def pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full modern ANN stack in one query — IVF ROUTES, PQ
     COMPRESSES (FAISS IVFPQ): vectors are assigned to 8 coarse KMeans
-    cells and product-quantized; a query probes its 3 nearest cells
+    cells and product-quantized; a query probes its 4 nearest cells
     (over an `ivf_write` layout that filter is partition pruning — at
     100 TB only nprobe/k of the index is read, and what IS read is the
     4x-to-64x smaller codes), ranks the probed rows by the m-lookup ADC
@@ -7136,7 +7138,10 @@ def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qvec = _query_vector(spark, sf_dir, 0)
     d2 = ((coarse - np.asarray(qvec)) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d2)[:3]]
+    # 4 of 8: the KMeans cells are balanced (≈1/8 of the rows each), so
+    # 4 cells read ≈50 % of the rows — the recall-for-bytes point that
+    # tests/test_rows_only_invariants.py pins for this query
+    probe = [int(i) for i in np.argsort(d2)[:4]]
     probed = coded.filter(F.col("cluster_id").isin(probe))
     return pq_search(probed, books, qvec, k=10, rerank=8)
 
@@ -7632,8 +7637,9 @@ def corpus_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_db_setup_spark.sources.registry import spread_to_cores
 
     d = spread_to_cores(load_table(spark, sf_dir, "documents"))
-    # share the memoized span relation with duplicate_spans (detect is
-    # the dominant half; strip is one small per-doc agg + a map stage)
+    # memoized so repeat invocations of this query reuse the span
+    # relation (detect is the dominant half; strip is one small per-doc
+    # agg + a map stage)
     spans = _memo_persist(
         spark, sf_dir, "dup_spans_n8", lambda: duplicate_spans(d, n=8)
     )

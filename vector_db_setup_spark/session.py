@@ -24,7 +24,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the shared SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism. Key choices:
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism; unset, it is
+    the number of CPUs this process may run on. Key choices:
 
     - AQE on (coalesce + skew-join): at 100 TB the right shuffle
       partitioning is decided at runtime, not hardcoded.
@@ -32,7 +33,9 @@ def get_spark(
     - Session timezone UTC: parity with DuckDB oracle on timestamps.
     - zstd parquet: best scan/size tradeoff for cold 100 TB storage.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
