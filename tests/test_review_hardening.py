@@ -561,7 +561,10 @@ def test_compact_ivf_index_stamps_compact_op(spark, tmp_path):
 
 
 def test_extra_meta_cannot_clobber_index_keys(spark, tmp_path):
-    from vector_db_setup_spark.operators.ann_index import build_ivf_index
+    from vector_db_setup_spark.operators.ann_index import (
+        build_ivf_index,
+        merge_into_ivf_index,
+    )
 
     with pytest.raises(ValueError, match="index's own keys"):
         build_ivf_index(
@@ -575,6 +578,11 @@ def test_extra_meta_cannot_clobber_index_keys(spark, tmp_path):
     )
     meta = snapshot_info(spark, idx, 1)["meta"]
     assert meta["built_by"] == "test" and meta["kind"] == "ivf"
+    # a maintenance write's batch counter is the index's own key too
+    with pytest.raises(ValueError, match="index's own keys"):
+        merge_into_ivf_index(
+            _vecs(spark, 0, 5), idx, extra_meta={"merged_batches": 0}
+        )
 
 
 def test_gemm_assign_tolerates_null_and_ragged_vectors(spark):

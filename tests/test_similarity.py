@@ -334,8 +334,10 @@ def test_batch_knn_blocked_keeps_boundary_ties(spark):
         (i, rng.standard_normal(8).tolist()) for i in range(10, 20)
     ]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # a NULL and a wrong-width query are left out, not a driver crash
     queries = spark.createDataFrame(
-        [(100, rng.standard_normal(8).tolist()), (101, base)],
+        [(100, rng.standard_normal(8).tolist()), (101, base), (102, None),
+         (103, [1.0, 2.0, 3.0])],
         "query_id long, qvec array<double>",
     )
     got = {
@@ -347,7 +349,7 @@ def test_batch_knn_blocked_keeps_boundary_ties(spark):
     want = {
         (r["query_id"], r["vec_id"])
         for r in batch_knn_join(
-            queries,
+            queries.filter("query_id < 102"),
             corpus,
             query_vec_col="qvec",
             corpus_vec_col="embedding",

@@ -533,34 +533,42 @@ def test_ivf_append_drift_recommends_rebuild(spark, tmp_path):
     assert m2["rebuild_recommended"] is True
 
 
-def test_ivf_append_reassigns_on_concurrent_rebuild(spark, tmp_path):
-    """A rebuild with NEW centroids landing mid-append must not let the
-    old-centroid assignment commit — the append re-assigns against the
-    new head's geometry."""
+@pytest.mark.parametrize("op", ["append", "merge"])
+def test_ivf_append_reassigns_on_concurrent_rebuild(spark, tmp_path, op):
+    """A rebuild with NEW centroids landing mid-write must not let the
+    old-centroid assignment commit — the append (or merge) conflicts
+    on its pinned head and re-assigns against the new head's
+    geometry."""
     from vector_db_setup_spark.operators.ann_index import (
         append_to_ivf_index,
         build_ivf_index,
+        merge_into_ivf_index,
     )
     from vector_db_setup_spark.operators.ann import ivf_assign
 
     base = str(tmp_path / "ivf")
     build_ivf_index(_emb_df(spark, 0, 100), base, k=3)
 
-    class RebuildMidAppend(LocalFS):
+    class RebuildMidWrite(LocalFS):
+        """Lands the rival rebuild at the write's second marker
+        listing: after it resolved v1's centroids, before its commit."""
+
         def __init__(self):
-            self.fired = False
+            self.listings = 0
 
         def listdir(self, path):
-            if path.endswith("_commits") and not self.fired:
-                self.fired = True
-                build_ivf_index(
-                    _emb_df(spark, 0, 140, shift=3.0), base, k=3, seed=99
-                )
+            if path.endswith("_commits"):
+                self.listings += 1
+                if self.listings == 2:
+                    build_ivf_index(
+                        _emb_df(spark, 0, 140, shift=3.0), base, k=3, seed=99
+                    )
             return super().listdir(path)
 
+    write = append_to_ivf_index if op == "append" else merge_into_ivf_index
     batch = _emb_df(spark, 500, 520)
-    v = append_to_ivf_index(batch, base, fs=RebuildMidAppend())
-    assert v == 3  # append landed AFTER the rival rebuild's v2
+    v = write(batch, base, fs=RebuildMidWrite())
+    assert v == 3  # the write landed AFTER the rival rebuild's v2
     meta = snapshot_info(spark, base, 3)["meta"]
     rebuilt_meta = snapshot_info(spark, base, 2)["meta"]
     assert meta["centroids"] == rebuilt_meta["centroids"]  # new geometry

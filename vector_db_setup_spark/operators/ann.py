@@ -35,6 +35,7 @@ from vector_db_setup_spark.operators.knn import knn_topk
 from vector_db_setup_spark.operators.similarity import (
     MAX_QUERY_ROWS,
     CorpusTooLargeError,
+    collect_queries,
     l2_topk_candidates,
     rank_topk,
     usable_rows,
@@ -363,19 +364,17 @@ def ivf_search_batch(
             T.StructField("distance", T.DoubleType()),
         ]
     )
-    qpdf = (
-        queries.select(qid_col, qvec_col).limit(MAX_QUERY_ROWS + 1).toPandas()
+    got = collect_queries(
+        queries, qid_col, qvec_col, MAX_QUERY_ROWS, cents.shape[1]
     )
-    if len(qpdf) > MAX_QUERY_ROWS:
+    if got is None:
         raise CorpusTooLargeError(
             f"ivf_search_batch: more than {MAX_QUERY_ROWS} queries; "
             "split the batch"
         )
-    qpdf = qpdf[usable_rows(qpdf[qvec_col].to_numpy(), cents.shape[1])]
-    if qpdf.empty:
+    qids, qmat = got
+    if not len(qids):
         return spark.createDataFrame([], schema)
-    qids = qpdf[qid_col].to_numpy()
-    qmat = np.stack(qpdf[qvec_col].to_numpy()).astype(np.float64)
     mask = np.zeros((len(qmat), len(cents)), dtype=bool)
     for i, q in enumerate(qmat):
         mask[i, probe_ids(cents, q, nprobe)] = True

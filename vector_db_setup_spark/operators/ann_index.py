@@ -27,6 +27,8 @@ plan-asserted); commit protocol in sources/snapshot_table.py.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,23 +69,17 @@ def build_ivf_index(
 
     The marker also records ``mean_assign_dist`` — the mean L2
     distance of the build's vectors to their assigned centroid (the
-    index's quantization-error baseline). ``append_to_ivf_index``
-    compares each appended batch against it to decide when the
-    centroids have drifted enough to recommend a full retrain."""
+    index's quantization-error baseline). ``append_to_ivf_index`` and
+    ``merge_into_ivf_index`` compare each landed batch against it to
+    decide when the centroids have drifted enough to recommend a full
+    retrain."""
+    extra = _checked_extra_meta(extra_meta)
     cents = kmeans_centroids(
         emb.select(F.col(vec_col).alias("embedding")), k=k, seed=seed
     )
-    # persist: the drift-baseline agg AND the landing both evaluate the
-    # corpus-sized assignment — without the cache the dominant cost of
-    # every rebuild runs twice (append_to_ivf_index already persists
-    # its batch for the same reason; the corpus path matters more)
-    assigned = ivf_assign_gemm(
-        emb, cents, vec_col=vec_col, dist_col="_adist"
-    ).persist()
-    try:
-        mean_d = assigned.agg(F.avg("_adist")).first()[0]
+    with _assigned(emb, cents, vec_col) as (assigned, mean_d):
         return write_snapshot(
-            assigned.drop("_adist"),
+            assigned,
             base,
             note=f"ivf k={k} seed={seed}",
             fs=fs,
@@ -97,11 +93,28 @@ def build_ivf_index(
                 "centroids": [
                     [float(x) for x in c] for c in np.asarray(cents)
                 ],
-                "mean_assign_dist": (
-                    float(mean_d) if mean_d is not None else None
-                ),
-                **_checked_extra_meta(extra_meta),
+                "mean_assign_dist": mean_d,
+                **extra,
             },
+        )
+
+
+@contextmanager
+def _assigned(emb: DataFrame, cents: np.ndarray, vec_col: str):
+    """``emb`` assigned to ``cents`` by the GEMM kernel, persisted for
+    the block, and the mean L2 distance of its vectors to their
+    assigned centroid (None when no vector was assignable). Persisted
+    because the mean's aggregate and the landing both evaluate the
+    assignment: without the cache an expensive upstream (the corpus of
+    a build, a join or feature stage behind a batch) runs twice."""
+    assigned = ivf_assign_gemm(
+        emb, cents, vec_col=vec_col, dist_col="_adist"
+    ).persist()
+    try:
+        mean_d = assigned.agg(F.avg("_adist")).first()[0]
+        yield (
+            assigned.drop("_adist"),
+            float(mean_d) if mean_d is not None else None,
         )
     finally:
         assigned.unpersist()
@@ -110,8 +123,8 @@ def build_ivf_index(
 _RESERVED_META = frozenset(
     {
         "kind", "k", "seed", "vec_col", "centroids", "mean_assign_dist",
-        "appended_batches", "last_append_mean_dist", "drift_ratio",
-        "rebuild_recommended",
+        "appended_batches", "merged_batches", "last_append_mean_dist",
+        "drift_ratio", "rebuild_recommended",
     }
 )
 
@@ -120,8 +133,9 @@ def _checked_extra_meta(extra_meta: dict | None) -> dict:
     """extra_meta rides the marker for AUDIT fields (maintainer
     cursors, provenance) — it must never clobber the index's own keys:
     overwriting 'kind' bricks every later search ('not an IVF index
-    commit'), overwriting the drift fields corrupts the rebuild
-    signal. Refuse loudly instead of spreading last and praying."""
+    commit'), overwriting the drift fields or a batch counter corrupts
+    the rebuild signal. Refuse loudly instead of spreading last and
+    praying."""
     extra = extra_meta or {}
     bad = sorted(set(extra) & _RESERVED_META)
     if bad:
@@ -133,7 +147,8 @@ def _checked_extra_meta(extra_meta: dict | None) -> dict:
 
 
 def _resolve_ivf(spark, base: str, version, fs):
-    """Shared marker resolution: pinned version + validated IVF meta +
+    """The one marker resolution of every index entry point: pinned
+    version (the head when ``version`` is None) + validated IVF meta +
     centroids array. One driver-side small-file read."""
     from vector_db_setup_spark.sources.snapshot_table import current_version
 
@@ -180,19 +195,21 @@ def search_ivf_index(
     silently searches the wrong clusters; dot recall is softer —
     centroids average away member norms — raise nprobe accordingly).
     The index layout is metric-agnostic (KMeans L2 clustering serves
-    all three — the standard IVF arrangement)."""
-    from vector_db_setup_spark.operators.knn import knn_topk
-
-    from vector_db_setup_spark.operators.ann import probe_ids
+    all three — the standard IVF arrangement). The search itself is
+    ``ann.ivf_search`` over the pinned version: the same probe filter
+    and ``knn_topk`` plan as the path-based form."""
+    from vector_db_setup_spark.operators.ann import ivf_search
 
     v, meta, cents = _resolve_ivf(spark, base, version, fs)
-    probe = probe_ids(cents, query_vec, nprobe, metric)
-    scan = read_snapshot(spark, base, version=v, fs=fs).filter(
-        F.col("cluster_id").isin(probe)
-    )
-    return knn_topk(
-        scan, meta["vec_col"], query_vec, k=topk, id_col=id_col,
+    return ivf_search(
+        read_snapshot(spark, base, version=v, fs=fs),
+        cents,
+        query_vec,
+        k=topk,
+        nprobe=nprobe,
+        vec_col=meta["vec_col"],
         metric=metric,
+        id_col=id_col,
     )
 
 
@@ -260,86 +277,41 @@ def append_to_ivf_index(
     DRIFT: appended data can wander away from the trained centroids
     (new topics → vectors far from every center → recall decays even
     at the same nprobe). Each append records in the marker meta:
-    ``last_append_mean_dist`` (the batch's mean assignment distance),
-    ``drift_ratio`` (batch mean / the ORIGINAL build's
-    ``mean_assign_dist``), and ``rebuild_recommended`` (drift_ratio >
-    ``rebuild_drift_ratio``). The metric is advisory — the append
-    still commits (the index stays EXACT within its probed clusters;
-    drift costs recall-per-nprobe, not correctness) — and an operator
-    or scheduler reads it off ``snapshot_info(...)["meta"]`` to decide
-    when to pay for a full ``build_ivf_index``.
+    ``appended_batches`` (a running count), ``last_append_mean_dist``
+    (the batch's mean assignment distance), ``drift_ratio`` (batch
+    mean / the ORIGINAL build's ``mean_assign_dist``), and
+    ``rebuild_recommended`` (drift_ratio > ``rebuild_drift_ratio``).
+    The metric is advisory — the append still commits (the index stays
+    EXACT within its probed clusters; drift costs recall-per-nprobe,
+    not correctness) — and an operator or scheduler reads it off
+    ``snapshot_info(...)["meta"]`` to decide when to pay for a full
+    ``build_ivf_index``.
 
     CONCURRENCY: the assignment is DERIVED from the head marker's
     centroids, so the commit pins ``expected_head`` — if a concurrent
     rebuild landed new centroids mid-append, blindly committing would
     mix two centroid geometries in one version (probes would miss the
     mis-assigned rows). On conflict the batch is RE-ASSIGNED against
-    the new head's centroids and retried, same loop as
-    upsert_snapshot."""
-    from vector_db_setup_spark.sources.snapshot_table import (
-        SnapshotConflictError,
-        append_snapshot,
-        current_version,
-    )
+    the new head's centroids and retried, at most ``retries`` times
+    (``_land_on_head``, the loop ``merge_into_ivf_index`` shares)."""
+    from vector_db_setup_spark.sources.snapshot_table import append_snapshot
 
-    spark = new_emb.sparkSession
-    last: Exception | None = None
-    for _ in range(retries + 1):
-        v = current_version(spark, base, fs)
-        info = snapshot_info(spark, base, v, fs)
-        meta = info.get("meta") or {}
-        if meta.get("kind") != "ivf":
-            raise ValueError(
-                f"version {v} at {base} is not an IVF index commit "
-                f"(marker meta: {sorted(meta) or 'none'}); append only "
-                "maintains indexes built by build_ivf_index"
-            )
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        vec_col = meta["vec_col"]
-        assigned = ivf_assign_gemm(
-            new_emb, cents, vec_col=vec_col, dist_col="_adist"
+    def commit(assigned, v, meta, fields):
+        return append_snapshot(
+            assigned,
+            base,
+            note=f"ivf append onto v{v}",
+            fs=fs,
+            idempotency_key=idempotency_key,
+            partition_by=["cluster_id"],
+            meta={**meta, **fields},
+            expected_head=v,
         )
-        # persist: the drift agg below and append_snapshot's write both
-        # evaluate this lineage — without a cache an expensive upstream
-        # (a join / feature-extraction stage) runs twice per append
-        assigned.persist()
-        batch_mean = assigned.agg(F.avg("_adist")).first()[0]
-        base_mean = meta.get("mean_assign_dist")
-        drift = (
-            float(batch_mean) / float(base_mean)
-            if batch_mean is not None and base_mean
-            else None
-        )
-        new_meta = {
-            **meta,
-            "appended_batches": int(meta.get("appended_batches", 0)) + 1,
-            "last_append_mean_dist": (
-                float(batch_mean) if batch_mean is not None else None
-            ),
-            "drift_ratio": drift,
-            "rebuild_recommended": bool(
-                drift is not None and drift > rebuild_drift_ratio
-            ),
-            **_checked_extra_meta(extra_meta),
-        }
-        try:
-            return append_snapshot(
-                assigned.drop("_adist"),
-                base,
-                note=f"ivf append onto v{v}",
-                fs=fs,
-                idempotency_key=idempotency_key,
-                partition_by=["cluster_id"],
-                meta=new_meta,
-                expected_head=v,
-            )
-        except SnapshotConflictError as e:
-            last = e  # head moved (possibly NEW centroids): re-assign
-        finally:
-            assigned.unpersist()
-    raise RuntimeError(
-        f"append_to_ivf_index kept losing to concurrent writers at {base}"
-    ) from last
+
+    return _land_on_head(
+        "append_to_ivf_index", "appended_batches", new_emb, base, fs,
+        rebuild_drift_ratio, retries, extra_meta, commit,
+    )
 
 
 def merge_into_ivf_index(
@@ -364,78 +336,91 @@ def merge_into_ivf_index(
     probed cluster either anti-joins the stale image away or never
     held it.
 
-    Same drift bookkeeping (``last_append_mean_dist`` / ``drift_ratio``
-    / ``rebuild_recommended`` vs the original build's
-    ``mean_assign_dist``) and the same re-assign-on-conflict loop as
-    ``append_to_ivf_index``: the assignment derives from the head's
-    centroids, so the commit pins ``expected_head`` and recomputes
-    against new centroids if a rebuild lands mid-merge. ``extra_meta``
-    merges into the carried-forward marker meta (maintainer cursors).
+    Lands through the same head-pinned loop as ``append_to_ivf_index``
+    (``_land_on_head``): the same drift bookkeeping
+    (``last_append_mean_dist`` / ``drift_ratio`` /
+    ``rebuild_recommended`` vs the original build's
+    ``mean_assign_dist``), a running ``merged_batches`` count, and the
+    same re-assign-on-conflict retries — the assignment derives from
+    the head's centroids, so the commit pins ``expected_head`` and
+    recomputes against new centroids if a rebuild lands mid-merge.
+    ``extra_meta`` merges into the carried-forward marker meta
+    (maintainer cursors).
 
     Raises ``TombstonedKeyError`` (propagated from merge_snapshot)
     when a batch key sits under an UNSCOPED tombstone from an earlier
     index delete — ``compact_ivf_index`` clears the stack; the
     commit-log maintainer self-heals exactly that way."""
-    from vector_db_setup_spark.sources.snapshot_table import (
-        SnapshotConflictError,
-        current_version,
-        merge_snapshot,
+    from vector_db_setup_spark.sources.snapshot_table import merge_snapshot
+
+    def commit(assigned, v, meta, fields):
+        return merge_snapshot(
+            assigned,
+            base,
+            key_col=key_col,
+            note=f"ivf merge onto v{v}",
+            fs=fs,
+            idempotency_key=idempotency_key,
+            partition_by=["cluster_id"],
+            meta_update=fields,
+            expected_head=v,
+        )
+
+    return _land_on_head(
+        "merge_into_ivf_index", "merged_batches", changed_emb, base, fs,
+        rebuild_drift_ratio, retries, extra_meta, commit,
     )
 
-    spark = changed_emb.sparkSession
+
+def _land_on_head(
+    op: str,
+    counter: str,
+    batch: DataFrame,
+    base: str,
+    fs,
+    rebuild_drift_ratio: float,
+    retries: int,
+    extra_meta: dict | None,
+    commit,
+) -> int:
+    """The one IVF maintenance write: each attempt resolves the head,
+    assigns ``batch`` to the head's centroids, builds the marker fields
+    (the ``counter`` of landed batches, the drift fields, the checked
+    ``extra_meta``) and calls ``commit(assigned, v, head_meta,
+    fields)``, which lands with ``expected_head=v``. A conflict means
+    the head moved — possibly to NEW centroids — so the next attempt
+    re-assigns against the new head."""
+    from vector_db_setup_spark.sources.snapshot_table import (
+        SnapshotConflictError,
+    )
+
+    spark = batch.sparkSession
+    extra = _checked_extra_meta(extra_meta)
     last: Exception | None = None
     for _ in range(retries + 1):
-        v = current_version(spark, base, fs)
-        info = snapshot_info(spark, base, v, fs)
-        meta = info.get("meta") or {}
-        if meta.get("kind") != "ivf":
-            raise ValueError(
-                f"version {v} at {base} is not an IVF index commit "
-                f"(marker meta: {sorted(meta) or 'none'}); merge only "
-                "maintains indexes built by build_ivf_index"
-            )
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        vec_col = meta["vec_col"]
-        assigned = ivf_assign_gemm(
-            changed_emb, cents, vec_col=vec_col, dist_col="_adist"
-        )
-        assigned.persist()
-        batch_mean = assigned.agg(F.avg("_adist")).first()[0]
+        v, meta, cents = _resolve_ivf(spark, base, None, fs)
         base_mean = meta.get("mean_assign_dist")
-        drift = (
-            float(batch_mean) / float(base_mean)
-            if batch_mean is not None and base_mean
-            else None
-        )
-        meta_update = {
-            "merged_batches": int(meta.get("merged_batches", 0)) + 1,
-            "last_append_mean_dist": (
-                float(batch_mean) if batch_mean is not None else None
-            ),
-            "drift_ratio": drift,
-            "rebuild_recommended": bool(
-                drift is not None and drift > rebuild_drift_ratio
-            ),
-            **_checked_extra_meta(extra_meta),
-        }
-        try:
-            return merge_snapshot(
-                assigned.drop("_adist"),
-                base,
-                key_col=key_col,
-                note=f"ivf merge onto v{v}",
-                fs=fs,
-                idempotency_key=idempotency_key,
-                partition_by=["cluster_id"],
-                meta_update=meta_update,
-                expected_head=v,
+        with _assigned(batch, cents, meta["vec_col"]) as (assigned, mean_d):
+            drift = (
+                mean_d / float(base_mean)
+                if mean_d is not None and base_mean
+                else None
             )
-        except SnapshotConflictError as e:
-            last = e  # head moved (possibly NEW centroids): re-assign
-        finally:
-            assigned.unpersist()
+            fields = {
+                counter: int(meta.get(counter, 0)) + 1,
+                "last_append_mean_dist": mean_d,
+                "drift_ratio": drift,
+                "rebuild_recommended": bool(
+                    drift is not None and drift > rebuild_drift_ratio
+                ),
+                **extra,
+            }
+            try:
+                return commit(assigned, v, meta, fields)
+            except SnapshotConflictError as e:
+                last = e  # head moved (possibly NEW centroids): re-assign
     raise RuntimeError(
-        f"merge_into_ivf_index kept losing to concurrent writers at {base}"
+        f"{op} kept losing to concurrent writers at {base}"
     ) from last
 
 
@@ -460,21 +445,12 @@ def compact_ivf_index(
     the LIVE-row fraction (a merge-churned index must not compact its
     dead pre-images into the sizing), and carries checks/stats — all
     fixes a hand-rolled twin silently drifts behind."""
-    from vector_db_setup_spark.sources.snapshot_table import (
-        compact_snapshot,
-        current_version,
-    )
+    from vector_db_setup_spark.sources.snapshot_table import compact_snapshot
 
     from vector_db_setup_spark.sources.fs import get_fs
 
     rfs = fs if fs is not None else get_fs(spark, base)
-    v = current_version(spark, base, rfs)
-    meta = (snapshot_info(spark, base, v, rfs).get("meta") or {})
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"version {v} at {base} is not an IVF index commit; use "
-            "compact_snapshot for plain tables"
-        )
+    _resolve_ivf(spark, base, None, rfs)
     return compact_snapshot(
         spark,
         base,

@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_setup_spark.operators.ann import (
-    _GEMM_ASSIGN_K,
     ivf_assign,
+    ivf_assign_auto,
     ivf_assign_gemm,
 )
 from vector_db_setup_spark.operators.similarity import cosine_pairs_by_column
@@ -59,9 +59,9 @@ def semdedup_assign(
     domination join) and Catalyst recomputes the whole BoW/argmin
     lineage per read otherwise (profiled: 3× the assignment cost on
     every invocation of queries.semdedup_doc_keepers)."""
-    if assign == "auto":
-        assign = "gemm" if len(centroids) > _GEMM_ASSIGN_K else "expr"
-    assign_fn = ivf_assign_gemm if assign == "gemm" else ivf_assign
+    assign_fn = {"auto": ivf_assign_auto, "gemm": ivf_assign_gemm}.get(
+        assign, ivf_assign
+    )
     return assign_fn(emb, centroids, vec_col=vec_col, dist_col="_cd")
 
 

@@ -629,6 +629,34 @@ def usable_rows(vecs: np.ndarray, dim: int) -> np.ndarray:
     )
 
 
+def collect_queries(
+    queries: DataFrame,
+    qid_col: str,
+    qvec_col: str,
+    cap: int,
+    dim: int | None = None,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The query side of the broadcast batch kernels, in one bounded
+    job: at most ``cap`` + 1 rows of (``qid_col``, ``qvec_col``) reach
+    the driver. Returns None when there are more than ``cap`` queries;
+    otherwise (query ids, float64 query matrix) of the queries whose
+    vector is not NULL and ``dim`` wide (by default the most common
+    width among them, the smaller one on a tie). The other queries are
+    left out."""
+    pdf = queries.select(qid_col, qvec_col).limit(cap + 1).toPandas()
+    if len(pdf) > cap:
+        return None
+    vecs = pdf[qvec_col].to_numpy()
+    if dim is None:
+        widths, counts = np.unique(
+            [len(v) for v in vecs if v is not None], return_counts=True
+        )
+        dim = int(widths[counts.argmax()]) if len(widths) else 0
+    ok = usable_rows(vecs, dim)
+    qmat = np.stack(vecs[ok]) if ok.any() else np.empty((0, dim))
+    return pdf[qid_col].to_numpy()[ok], qmat.astype(np.float64)
+
+
 def l2_topk_candidates(
     ids: np.ndarray, vecs: np.ndarray, qids: np.ndarray, qmat: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -707,12 +735,13 @@ def batch_knn_blocked(
     side is collected+broadcast — small by definition of batch KNN — and
     guarded: past ``max_query_rows`` the operator either falls back to
     the pure-DataFrame ``batch_knn_join`` (on_oversize="fallback") or
-    raises (on_oversize="error") instead of OOMing the driver. Corpus
-    rows with a NULL vector or a width other than the queries' are left
-    out."""
+    raises (on_oversize="error") instead of OOMing the driver. Queries
+    with a NULL vector or a width other than the most common one, and
+    corpus rows with a NULL vector or a width other than the queries',
+    are left out."""
     spark = corpus.sparkSession
-    nq = _count_capped(queries, max_query_rows)
-    if nq > max_query_rows:
+    got = collect_queries(queries, query_id_col, query_vec_col, max_query_rows)
+    if got is None:
         if on_oversize == "fallback":
             from vector_db_setup_spark.operators.knn import batch_knn_join
 
@@ -734,15 +763,13 @@ def batch_knn_blocked(
         raise CorpusTooLargeError(
             f"query side exceeds max_query_rows={max_query_rows}"
         )
-    qrows = queries.select(query_id_col, query_vec_col).collect()
+    q_ids, q_mat = got
     spark_schema = (
         f"query_id long, {id_col} long, dist double"
     )
-    if not qrows:  # 0 queries -> 0 neighbors, not an executor crash
+    if not len(q_ids):  # 0 queries -> 0 neighbors, not an executor crash
         return spark.createDataFrame([], spark_schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    b_qids = spark.sparkContext.broadcast(q_ids)
+    b_qids = spark.sparkContext.broadcast(q_ids.astype(np.int64))
     b_qmat = spark.sparkContext.broadcast(q_mat)
 
     def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -120,7 +120,7 @@ def foreach_new_versions(
 ):
     """Run ``apply_fn(spark, through_version)`` once per micro-batch of
     new commits at ``base``, with ``through_version`` = the highest
-    version the batch delivered. Returns the started StreamingQuery.
+    version the batch delivered.
 
     The batch's exact membership is irrelevant by design: versions are
     allocated densely (head+1), so a consumer that tracks its own
@@ -131,9 +131,12 @@ def foreach_new_versions(
     idempotent ``apply_fn`` absorbs. Collecting inside the batch is
     control-plane only (marker rows, not table rows).
 
-    ``available_now=True`` drains everything committed so far and
-    stops — the "run maintenance now" form; False leaves a continuous
-    subscription.
+    ``available_now=True`` drains everything committed so far, blocks
+    until the drain finishes and returns None — the "run maintenance
+    now" form. False starts a continuous subscription and returns its
+    StreamingQuery, so the caller can stop()/awaitTermination()/monitor
+    it (a subscription whose handle is dropped can fail silently while
+    looking healthy). Every ``maintain_*_from_commits`` returns this.
     """
     commits = stream_snapshot_commits(spark, base, **reader_options)
 
@@ -146,9 +149,10 @@ def foreach_new_versions(
     writer = commits.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if not available_now:
+        return writer.start()
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return None
 
 
 def maintain_bloom_from_commits(
@@ -248,7 +252,7 @@ def maintain_bloom_from_commits(
             },
         )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         base,
         _apply,
@@ -256,10 +260,6 @@ def maintain_bloom_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_ivf_from_commits(
@@ -533,7 +533,7 @@ def maintain_ivf_from_commits(
         finally:
             feed.unpersist()
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -541,10 +541,6 @@ def maintain_ivf_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_agg_from_commits(
@@ -730,7 +726,7 @@ def maintain_agg_from_commits(
             meta={**meta, "through_version": through_v},
         )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -738,10 +734,6 @@ def maintain_agg_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_lm_from_commits(
@@ -873,7 +865,7 @@ def maintain_lm_from_commits(
             meta={**params, "through_version": through_v},
         )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -881,10 +873,6 @@ def maintain_lm_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_ppl_histogram_from_commits(
@@ -1105,7 +1093,7 @@ def maintain_ppl_histogram_from_commits(
             },
         )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -1113,10 +1101,6 @@ def maintain_ppl_histogram_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_dsir_from_commits(
@@ -1248,7 +1232,7 @@ def maintain_dsir_from_commits(
             meta={**params, "through_version": through_v},
         )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -1256,10 +1240,6 @@ def maintain_dsir_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_semantic_overlap_from_commits(
@@ -1428,7 +1408,7 @@ def maintain_semantic_overlap_from_commits(
                 )
             )
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -1436,10 +1416,6 @@ def maintain_semantic_overlap_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_lsh_index_from_commits(
@@ -1665,7 +1641,7 @@ def maintain_lsh_index_from_commits(
         finally:
             feed.unpersist()
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -1673,10 +1649,6 @@ def maintain_lsh_index_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintain_span_index_from_commits(
@@ -1951,7 +1923,7 @@ def maintain_span_index_from_commits(
         finally:
             feed.unpersist()
 
-    q = foreach_new_versions(
+    return foreach_new_versions(
         spark,
         source_base,
         _apply,
@@ -1959,10 +1931,6 @@ def maintain_span_index_from_commits(
         available_now=available_now,
         **reader_options,
     )
-    if available_now:
-        q.awaitTermination()
-        return None
-    return q
 
 
 def maintenance_cycle(
