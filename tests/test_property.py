@@ -118,20 +118,18 @@ def test_range_join_matches_bruteforce(spark, lefts, rights, delta):
     assert got == want
 
 
-def test_pandas_l2_udf_wide_vectors(spark):
-    """768-d reference-shaped vectors through the Arrow UDF path."""
-    from vector_db_setup_spark.functions.vector import pandas_l2_udf
+def test_l2_distance_wide_vectors(spark):
+    """768-d reference-shaped vectors through the native L2 expression."""
+    from vector_db_setup_spark.functions.vector import l2_distance, vector_literal
 
     rng = np.random.default_rng(42)
     rows = [(i, rng.standard_normal(768).tolist()) for i in range(20)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
     q = rows[0][1]
-    from vector_db_setup_spark.functions.vector import vector_literal
 
-    udf = pandas_l2_udf()
     got = {
         r["id"]: r["d"]
-        for r in df.select("id", udf("v", vector_literal(q)).alias("d")).collect()
+        for r in df.select("id", l2_distance("v", vector_literal(q)).alias("d")).collect()
     }
     for i, v in rows:
         want = float(np.linalg.norm(np.array(v) - np.array(q)))

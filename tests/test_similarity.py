@@ -195,70 +195,64 @@ def test_ivf_pairs_exact_within_clusters(spark):
     assert len(keys) == len(set(keys))
 
 
-def test_knn_wide_dim_udf_dispatch_matches_native(spark):
-    """knn_topk routes L2 queries at >= WIDE_DIM dims through the
-    Arrow/numpy kernel (SCALE_EXPERIMENTS.md r4 crossover). The two
-    paths must produce the same top-k ids and distances to 1e-9."""
+def test_knn_wide_dim_matches_numpy(spark):
+    """knn_topk at the reference's 768-d against numpy brute force: the
+    top-k ids in (distance, id) order, distances within 1e-9. Two
+    duplicate pairs make the id tie-break visible."""
     import numpy as np
 
     from vector_db_setup_spark.operators import knn as K
 
     rng = np.random.default_rng(5)
-    dim = K.WIDE_DIM
-    rows = [(i, [float(x) for x in rng.random(dim)]) for i in range(200)]
+    dim = 768
+    mat = rng.random((200, dim))
+    q = rng.random(dim)
+    near = np.argsort(np.linalg.norm(mat - q, axis=1))[:2]
+    mat[100], mat[101] = mat[near[0]], mat[near[1]]
+    rows = [(i, [float(x) for x in mat[i]]) for i in range(len(mat))]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    q = [float(x) for x in rng.random(dim)]
 
-    wide = K.knn_topk(df, "v", q, k=5, id_col="id").collect()
-    # force the native path by lowering the threshold check: call the
-    # expression directly
-    from pyspark.sql import functions as F
-
-    from vector_db_setup_spark.functions.vector import vector_literal
-
-    native = (
-        df.withColumn(
-            "distance",
-            K.distance_expr("l2", F.col("v"), vector_literal(q)),
-        )
-        .orderBy(F.col("distance").asc(), F.col("id").asc())
-        .limit(5)
-        .collect()
-    )
-    assert [r["id"] for r in wide] == [r["id"] for r in native]
-    for a, b in zip(wide, native):
-        assert abs(a["distance"] - b["distance"]) < 1e-9
+    got = K.knn_topk(df, "v", q.tolist(), k=5, id_col="id").collect()
+    dist = np.linalg.norm(mat - q, axis=1)
+    want = sorted(range(len(mat)), key=lambda i: (dist[i], i))[:5]
+    assert [r["id"] for r in got] == want
+    assert {100, 101} & set(want)
+    for r in got:
+        assert abs(r["distance"] - dist[r["id"]]) < 1e-9
 
 
-def test_knn_narrow_dim_keeps_native_plan(spark):
-    """Below WIDE_DIM the flagship plan must stay pure codegen — no
-    Python/Arrow eval node (the shuffle-free TakeOrderedAndProject
-    assertion lives in test_plans.py; this guards the dispatch)."""
+@pytest.mark.parametrize("dim", [8, 768])
+def test_knn_keeps_native_plan(spark, dim):
+    """The flagship plan stays pure codegen at every width, the
+    reference's 768-d included — no Python/Arrow eval node (the
+    shuffle-free TakeOrderedAndProject assertion lives in
+    test_plans.py)."""
     import numpy as np
 
     from vector_db_setup_spark.operators import knn as K
 
     rng = np.random.default_rng(6)
-    rows = [(i, [float(x) for x in rng.random(8)]) for i in range(50)]
+    rows = [(i, [float(x) for x in rng.random(dim)]) for i in range(50)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    plan = K.knn_topk(df, "v", [0.0] * 8, k=3)._jdf.queryExecution().executedPlan().toString()
+    plan = K.knn_topk(df, "v", [0.0] * dim, k=3)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_knn_wide_dim_udf_null_safe(spark):
-    """A NULL or wrong-width vector must yield a null distance (native
-    expression semantics), not crash the Arrow batch."""
+def test_knn_wide_dim_null_safe(spark):
+    """At 768-d a NULL or wrong-width vector yields a null distance,
+    ranked after every real neighbor, not an error."""
     import numpy as np
 
     from vector_db_setup_spark.operators import knn as K
 
-    dim = K.WIDE_DIM
+    dim = 768
     rng = np.random.default_rng(9)
     rows = [(1, [float(x) for x in rng.random(dim)]), (2, None),
             (3, [1.0, 2.0])]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    got = {r["id"]: r["distance"]
-           for r in K.knn_topk(df, "v", [0.0] * dim, k=3, id_col="id").collect()}
+    out = K.knn_topk(df, "v", [0.0] * dim, k=3, id_col="id").collect()
+    assert [r["id"] for r in out] == [1, 2, 3]
+    got = {r["id"]: r["distance"] for r in out}
     assert got[1] is not None and got[1] > 0
     assert got[2] is None and got[3] is None
 

@@ -12,18 +12,15 @@ type (fixtures store float32) so results are reproducible against the
 DuckDB oracle (`list_distance` on DOUBLE[]).
 
 At 100 TB: these expressions scale linearly with rows × dim and never
-shuffle. For very wide vectors (≥ 1k dims) an Arrow pandas_udf with numpy
-can win on constant factors — `pandas_l2_udf` below is that escape hatch;
-benchmarks at 64-d and 768-d showed the native expression within budget,
-so it is the default.
+shuffle. They are the single-query KNN form at every width (768-d
+included); batch search over many queries takes the GEMM kernels in
+operators/similarity.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np  # module scope: pandas_udf type-hint resolution
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -117,40 +114,6 @@ def random_vector(dim: int, seed: int = 42) -> Column:
 
     rng = np.random.default_rng(seed)
     return vector_literal(rng.random(dim).tolist())
-
-
-def pandas_l2_udf():
-    """Arrow-vectorized L2 fallback for very wide vectors.
-
-    Returns a pandas_udf computing per-row L2 distance between two
-    array columns via numpy. ~10-100× faster than row-at-a-time Python
-    UDFs (Arrow batch transfer), but still loses to the native expression
-    at 64-d; kept for the 768-d reference-shaped path and beyond.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _l2(a: pd.Series, b: pd.Series) -> pd.Series:
-        # null-safe like knn._pandas_l2_to_query: a NULL or
-        # width-mismatched vector must yield a null distance, not kill
-        # the whole Arrow batch in np.stack
-        av, bv = a.to_numpy(), b.to_numpy()
-        out = np.full(len(av), np.nan)
-        ok = [
-            i
-            for i in range(len(av))
-            if av[i] is not None
-            and bv[i] is not None
-            and len(av[i]) == len(bv[i])
-        ]
-        if ok:
-            am = np.stack([np.asarray(av[i], dtype=np.float64) for i in ok])
-            bm = np.stack([np.asarray(bv[i], dtype=np.float64) for i in ok])
-            out[ok] = np.sqrt(((am - bm) ** 2).sum(axis=1))
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None)
-
-    return _l2
 
 
 def assert_dim(df, vec_col: str, dim: int) -> None:

@@ -139,9 +139,11 @@ def ivf_assign(
     the argmin is a native expression, so assignment is a pure map stage.
 
     ``dist_col`` additionally emits the L2 distance to the assigned
-    centroid — the quantization-error signal `append_to_ivf_index`
-    aggregates into its drift metric (same single map stage; the
-    distance array is computed for the argmin anyway).
+    centroid (same single map stage; the distance array is computed for
+    the argmin anyway). Its consumer is `semdedup.semdedup_assign`
+    (through `ivf_assign_auto` at k ≤ 16): `semdedup_keepers` compares
+    it to pick which near-duplicate survives. The IVF index writes take
+    their drift distance from `ivf_assign_gemm` (`ann_index._assigned`).
 
     A NULL embedding gets a NULL cluster_id and is therefore excluded
     from every probe (isin / equi-join drop null keys) — validate

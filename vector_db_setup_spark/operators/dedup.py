@@ -12,8 +12,9 @@ operator avoids the O(N²) cross product):
   shingle are materialized), never a cross join.
 - SimHash: 32-bit signature; banding on 8-bit sub-keys guarantees recall
   for hamming ≤ 3 without pairwise comparison.
-- embedding-cosine: exact pairwise only within LSH/IVF buckets at scale
-  (operators/ann.py); the exact all-pairs form here is for modest N.
+- embedding-cosine: the GEMM kernels in operators/similarity.py (and
+  SemDeDup in operators/semdedup.py), pairwise only within LSH/IVF
+  buckets at scale.
 
 Hash portability: md5 only (identical across Spark/DuckDB), never
 engine-native hash().
@@ -29,7 +30,6 @@ from vector_db_setup_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from vector_db_setup_spark.functions.vector import cosine_similarity
 
 
 def _md5(col: Column) -> Column:
@@ -809,38 +809,6 @@ def simhash_banded_pairs(
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
-
-
-def embedding_similar_pairs(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    min_cosine: float | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (exact all-pairs form).
-
-    At scale, never run this raw: restrict to ANN buckets
-    (operators/ann.py ivf_assign / lsh bucketing) so the pairwise work is
-    per-bucket. The exact form remains the verifier inside each bucket.
-
-    Zero-vector convention: a pair touching an all-zero vector scores
-    cosine 0.0 (coalesced), matching the GEMM kernels' normalize-by-1
-    convention (operators/similarity._normalize) — without the coalesce
-    the expression form yields NULL and the two "equivalent" paths
-    disagree on exactly the rows a verifier compares.
-    """
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    out = pairs.withColumn(
-        "cosine",
-        F.coalesce(
-            cosine_similarity(F.col("v_a"), F.col("v_b")), F.lit(0.0)
-        ),
-    ).select("id_a", "id_b", "cosine")
-    if min_cosine is not None:
-        out = out.filter(F.col("cosine") >= min_cosine)
-    return out
 
 
 def winnowing_fingerprints(

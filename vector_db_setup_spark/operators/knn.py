@@ -24,8 +24,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -59,7 +57,6 @@ def knn_topk(
     metric: str = "l2",
     dist_col: str = "distance",
     id_col: str | None = None,
-    use_arrow_kernel: bool | None = None,
 ) -> DataFrame:
     """Exact top-k nearest rows to a literal query vector.
 
@@ -72,27 +69,13 @@ def knn_topk(
     (duplicate vectors) are then broken deterministically on the id, the
     same order every DuckDB oracle uses, instead of arbitrarily.
 
-    Width dispatch (SURVEY §7 risk, measured r4 in SCALE_EXPERIMENTS.md
-    "Native distance expression at reference width"): the native
-    zip_with/aggregate expression wins below ~256 dims (0.35 s vs
-    0.68 s warm at 64-d×100k) but per-element codegen overhead crosses
-    over at the reference's 768-d, where the Arrow-batched numpy UDF is
-    ~15 % faster (0.68 s vs 0.80 s). L2 queries at ≥ ``WIDE_DIM``
-    therefore route through the pandas UDF automatically; the fixture
-    paths (64-d) and every DuckDB-oracle comparison keep the native
-    expression. Override with ``use_arrow_kernel`` (True forces the
-    numpy kernel, False forces the native expression, None = the
-    width-based auto dispatch).
-
-    PARITY CAVEAT (ADVICE r4): the numpy kernel sums squared diffs in a
-    different order than the native left-fold ``aggregate`` expression,
-    so the two paths can differ in the LAST ULP of the distance. That
-    never changes values after the queries' 6-dp rounding, but at an
-    EXACTLY tied k-th boundary it could in principle swap which of two
-    near-equal rows makes the cut when no ``id_col`` total-orders the
-    tie. If strict cross-path/oracle parity at wide dims matters, pass
-    ``use_arrow_kernel=False`` or round the distance before the k-cut
-    (and always pass ``id_col``).
+    One form at every width and metric: the native ``distance_expr``
+    against a ``vector_literal`` of the query, the expression the DuckDB
+    oracles replay. At the reference's 768-d and probe sizes (≤ 2,200
+    rows) it answers faster than an Arrow-batched numpy kernel, whose
+    Python-worker round trip costs more than the arithmetic it saves
+    (SCALE_EXPERIMENTS.md "Kernel crossover by dimension"). Batch
+    search (many queries) takes the GEMM kernel in operators/similarity.
     """
     # nulls LAST: a NULL/wrong-width vector yields a NULL distance,
     # and Spark's default asc() is NULLS FIRST — which would rank every
@@ -101,64 +84,8 @@ def knn_topk(
     order = [F.col(dist_col).asc_nulls_last()]
     if id_col is not None:
         order.append(F.col(id_col).asc())
-    wide = (
-        use_arrow_kernel
-        if use_arrow_kernel is not None
-        else len(query_vec) >= WIDE_DIM
-    )
-    if use_arrow_kernel and metric != "l2":
-        raise ValueError(
-            f"use_arrow_kernel=True is only implemented for metric='l2' "
-            f"(got {metric!r}); the native expression is the only "
-            "cosine/dot path"
-        )
-    if metric == "l2" and wide:
-        dist = _pandas_l2_to_query(query_vec)(F.col(vec_col))
-    else:
-        q = vector_literal(query_vec)
-        dist = distance_expr(metric, F.col(vec_col), q)
+    dist = distance_expr(metric, F.col(vec_col), vector_literal(query_vec))
     return df.withColumn(dist_col, dist).orderBy(*order).limit(k)
-
-
-# Crossover between native zip_with/aggregate codegen and the
-# Arrow-batched numpy kernel. r5 sweep (100k vectors, min of 5 warm
-# runs, SCALE_EXPERIMENTS.md "Kernel crossover by dimension"):
-#   dim    128   192   256   384   768
-#   native 0.30  0.31  0.52  0.55  0.86 s
-#   arrow  0.41  0.35  0.68  0.53  0.71 s
-# Native wins through 256, ties at 384, loses only at 768 — and the
-# Arrow path's first-run cost (Python-worker + Arrow channel warm-up)
-# is 5-20x its warm time, so the tie goes to native. Threshold 512:
-# above it the ~20% warm win at 768-d is real and repeatable.
-WIDE_DIM = 512
-
-
-def _pandas_l2_to_query(query_vec: Sequence[float]):
-    """Arrow-vectorized L2-to-a-fixed-query kernel for wide vectors.
-
-    The query vector is captured as a numpy closure (shipped once per
-    executor in the serialized UDF, not per row as a literal array
-    column)."""
-    from pyspark.sql.functions import pandas_udf
-
-    qarr = np.asarray(list(query_vec), dtype="float64")
-
-    @pandas_udf("double")
-    def _l2(a: pd.Series) -> pd.Series:
-        # null-safe like the native zip_with/aggregate expression it
-        # replaces: a NULL or wrong-width vector yields a null distance,
-        # not a failed Arrow batch
-        vals = a.to_numpy()
-        ok = np.array(
-            [v is not None and len(v) == qarr.shape[0] for v in vals]
-        )
-        out = np.full(len(vals), np.nan)
-        if ok.any():
-            am = np.stack(vals[ok])
-            out[ok] = np.sqrt(((am - qarr) ** 2).sum(axis=1))
-        return pd.Series(out).where(pd.Series(ok), None)
-
-    return _l2
 
 
 def batch_knn_join(
