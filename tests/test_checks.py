@@ -326,3 +326,23 @@ def test_persist_cache_releases_dead_sessions():
     again = q._memo_persist(kept, "/tmp/x", "keep", lambda: FakeDF())
     assert first is again
     assert q.clear_persist_cache(kept) == 1
+
+
+def test_qvec_cache_is_bounded(monkeypatch):
+    """queries._QVEC_CACHE drops its oldest entry at _QVEC_MAX, and a
+    held key is served without recomputing."""
+    from vector_db_setup_spark import queries as q
+
+    monkeypatch.setattr(q, "_QVEC_CACHE", {})
+    monkeypatch.setattr(q, "_QVEC_MAX", 2)
+    calls = []
+
+    def compute(v):
+        calls.append(v)
+        return v
+
+    for i in range(5):
+        assert q._qvec_memo(("/tmp/x", i), lambda: compute(i)) == i
+        assert len(q._QVEC_CACHE) <= 2
+    assert q._qvec_memo(("/tmp/x", 4), lambda: compute(-1)) == 4
+    assert calls == [0, 1, 2, 3, 4]

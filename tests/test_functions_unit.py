@@ -297,3 +297,42 @@ def test_sql_vector_knn_plan_is_codegen_topk(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_vector_literal_round_trips_bit_identically(spark):
+    """The one literal form carries every double unchanged: 768 random
+    values, the signed zero, subnormal, boundary and non-round values,
+    and NaN/±inf inside the same query vector."""
+    import random
+    import struct
+
+    rng = random.Random(7)
+    vals = [rng.gauss(0.0, 1.0) for _ in range(768)]
+    vals += [
+        -0.0, 5e-324, 2.2250738585072014e-308, 1e308, 1 / 3,
+        float("nan"), float("inf"), float("-inf"),
+    ]
+    got = _one(spark, vector_literal(vals))
+    assert len(got) == len(vals)
+    assert [struct.pack("<d", x) for x in got] == [
+        struct.pack("<d", x) for x in vals
+    ]
+
+
+def test_knn_topk_plan_folds_the_query_literal(spark):
+    """At 768-d the query's from_json is folded to a literal before
+    execution: no per-row JSON parse reaches the optimized plan."""
+    import random
+
+    from vector_db_setup_spark.operators.knn import knn_topk
+
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [(i, [rng.random() for _ in range(768)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    q = [rng.random() for _ in range(768)]
+    df = knn_topk(emb, "embedding", q, k=2, id_col="vec_id")
+    plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "from_json" not in plan and "jsontostructs" not in plan
+    assert len(df.collect()) == 2

@@ -1825,8 +1825,8 @@ def test_ivf_assign_refuses_existing_cluster_id(spark):
 def test_pq_adc_lut_nonfinite_falls_back_to_lit(spark):
     """ADVICE r13: a NaN/Inf in the query vector propagates into the
     precomputed LUT; repr() of that cell ('nanD') used to raise
-    ParseException at expression-BUILD time. The guard must fall back
-    to the F.lit builder and propagate NaN through the data instead."""
+    ParseException at expression-BUILD time. The LUT literal must carry
+    the NaN and propagate it through the data instead."""
     import math
 
     import numpy as np
@@ -1842,7 +1842,7 @@ def test_pq_adc_lut_nonfinite_falls_back_to_lit(spark):
         pq_adc_distance_expr(books, bad_q).alias("adc")
     ).collect()[0]["adc"]
     assert out is None or math.isnan(out)
-    # finite query still uses the one-parse literal path and computes
+    # a finite query computes a finite distance through the same literal
     good = df.select(
         pq_adc_distance_expr(books, [0.0, 1.0, 2.0, 3.0]).alias("adc")
     ).collect()[0]["adc"]
@@ -1851,8 +1851,8 @@ def test_pq_adc_lut_nonfinite_falls_back_to_lit(spark):
 
 def test_max_cosine_bnorm_overflow_falls_back(spark):
     """ADVICE r13: finite benchmark elements can overflow the norm's
-    sum-of-squares to inf (no SQL literal form). The builder must fall
-    back instead of raising ParseException."""
+    sum-of-squares to inf, which a parsed SQL literal could not carry.
+    The builder must carry it instead of raising ParseException."""
     from vector_db_setup_spark.operators.similarity import (
         max_cosine_against_literal,
     )

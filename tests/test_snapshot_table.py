@@ -729,3 +729,108 @@ def test_gc_skips_versions_reclaimed_by_concurrent_gc(spark, tmp_path):
     )
     assert removed == [2]  # v2 still reclaimed; v1 skipped, run completed
     assert read_snapshot(spark, base).count() == 30  # head untouched
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pinned_ivf_search_runs_one_job(spark, tmp_path):
+    """A pinned single-query IVF search is one Spark job — the top-k;
+    no schema-inference job precedes it — and reading the same version
+    again starts none."""
+    import numpy as np
+
+    from vector_db_setup_spark.operators.ann_index import (
+        build_ivf_index,
+        search_ivf_index,
+    )
+
+    rng = np.random.default_rng(5)
+    x = rng.normal(size=(200, 8))
+    emb = spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(len(x))],
+        "vec_id long, embedding array<double>",
+    )
+    base = str(tmp_path / "idx")
+    v = build_ivf_index(emb, base, k=4, seed=1)
+    q = rng.normal(size=8)
+    rows, n = _jobs(
+        spark, "ivf-one-job",
+        lambda: search_ivf_index(
+            spark, base, q.tolist(), topk=5, nprobe=4, version=v
+        ).collect(),
+    )
+    assert n == 1, f"{n} jobs for one pinned search"
+    d = np.sqrt(((x - q) ** 2).sum(axis=1))
+    assert [r["vec_id"] for r in rows] == list(np.argsort(d, kind="stable")[:5])
+    plan = (
+        search_ivf_index(spark, base, q.tolist(), topk=5, nprobe=2, version=v)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "TakeOrderedAndProject" in plan and "Exchange" not in plan
+    _, n = _jobs(
+        spark, "reread-no-job", lambda: read_snapshot(spark, base, version=v)
+    )
+    assert n == 0
+
+
+def test_recreated_table_reads_its_new_schema(spark, tmp_path):
+    """A table deleted and re-created at the same base reuses version
+    numbers with new columns: the remembered schema of the old dirs
+    must not leak into the new version's read."""
+    import shutil
+
+    base = str(tmp_path / "t")
+    v = write_snapshot(_df(spark, 10), base)
+    assert read_snapshot(spark, base, version=v).columns == ["id", "payload"]
+    shutil.rmtree(base)
+    again = spark.range(5).select(
+        (F.col("id") * 2).alias("k"), F.lit(1.5).alias("score"),
+        F.lit("x").alias("tag"),
+    )
+    assert write_snapshot(again, base) == v
+    df = read_snapshot(spark, base, version=v)
+    assert df.columns == ["k", "score", "tag"]
+    assert sorted(r["k"] for r in df.collect()) == [0, 2, 4, 6, 8]
+
+
+def test_evolved_version_null_fills_after_remembered_read(spark, tmp_path):
+    """Reading the original dir first (so its two-column schema is
+    remembered) must not stop a schema_merged version from merging
+    footers and null-filling its late column."""
+    from vector_db_setup_spark.sources.snapshot_table import append_snapshot
+
+    base = str(tmp_path / "t")
+    v1 = write_snapshot(_df(spark, 10), base)
+    assert read_snapshot(spark, base, version=v1).count() == 10
+    v2 = append_snapshot(
+        _df(spark, 4).withColumn("lang", F.lit("en")), base,
+        merge_schema=True,
+    )
+    for _ in range(2):
+        df = read_snapshot(spark, base, version=v2)
+        assert set(df.columns) == {"id", "payload", "lang"}
+        assert df.filter(F.col("lang").isNull()).count() == 10
+        assert df.filter(F.col("lang") == "en").count() == 4
+
+
+def test_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
+    """The per-session schema memo never holds more than its bound, and
+    reads past an eviction still answer."""
+    from vector_db_setup_spark.sources import snapshot_table as st
+
+    monkeypatch.setattr(st, "_SCHEMAS_MAX", 2)
+    base = str(tmp_path / "t")
+    vs = [write_snapshot(_df(spark, n), base) for n in (3, 4, 5, 6)]
+    for _ in range(2):
+        for v, n in zip(vs, (3, 4, 5, 6)):
+            assert read_snapshot(spark, base, version=v).count() == n
+            assert len(st._SCHEMAS[spark]) <= 2

@@ -19,7 +19,7 @@ operators/similarity.
 
 from __future__ import annotations
 
-import math
+import json
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,21 +36,32 @@ def vector_literal(vec) -> Column:
     Replaces the reference's client-side pgvector adapter
     (``register_vector`` + ``%s::vector`` cast, fever_multi_agent.py:33,71).
 
-    Built as ONE parsed SQL expression: the element-wise
-    ``F.array(*[F.lit(x) ...])`` form costs one py4j round trip per
-    element (~60 ms for a 64-dim vector, ~1.2 s for a 20-vector
-    benchmark literal — measured dominating the per-invocation wall of
-    every literal-vector query), while a single ``F.expr`` parse yields
-    the IDENTICAL analyzed tree (array of double literals + cast) for
-    one round trip. Non-finite elements (inf/nan have no plain SQL
-    literal form) fall back to the per-element builder.
+    Built as ONE string literal parsed by ``from_json``: the analyser
+    sees a single leaf, and ConstantFolding turns it into the same
+    ``array<double>`` literal before optimisation ends, so no
+    ``from_json`` reaches the executed plan. The parsed
+    ``array(v1D, …)`` form it replaces had one child per element, and
+    analysing 768 of them dominated planning a single search: one probe
+    (4 cores) built a 768-d ``knn_topk`` plan over 2,000 rows in
+    ≈185 ms with it and ≈111 ms with one string. ``json.dumps`` writes
+    each double as its shortest round-tripping repr and non-finite
+    values as ``NaN``/``Infinity``/``-Infinity``, which ``from_json``
+    reads, so every value — NaN and ±inf included — arrives
+    bit-identical through the one path. ``matrix_literal`` is the
+    nested form.
     """
-    vals = [float(x) for x in vec]
-    if vals and all(math.isfinite(x) for x in vals):
-        return F.expr(
-            "array(" + ",".join(repr(x) + "D" for x in vals) + ")"
-        ).cast("array<double>")
-    return F.array(*[F.lit(x) for x in vals]).cast("array<double>")
+    return F.from_json(
+        F.lit(json.dumps([float(x) for x in vec])), "array<double>"
+    )
+
+
+def matrix_literal(rows) -> Column:
+    """Rows of numbers → array<array<double>> literal column: the
+    nested `vector_literal`, for centroid sets and lookup tables."""
+    return F.from_json(
+        F.lit(json.dumps([[float(x) for x in r] for r in rows])),
+        "array<array<double>>",
+    )
 
 
 def l2_distance_sq(a: Column | str, b: Column | str) -> Column:

@@ -30,7 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vector_db_setup_spark.functions.vector import l2_distance_sq, vector_literal
+from vector_db_setup_spark.functions.vector import (
+    l2_distance_sq,
+    matrix_literal,
+    vector_literal,
+)
 from vector_db_setup_spark.operators.knn import knn_topk
 from vector_db_setup_spark.operators.similarity import (
     MAX_QUERY_ROWS,
@@ -135,8 +139,9 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector its nearest-centroid id as `cluster_id`.
 
-    Centroids ship as a literal array-of-arrays (k×d doubles — tiny);
-    the argmin is a native expression, so assignment is a pure map stage.
+    Centroids ship as one ``matrix_literal`` (k×d doubles — tiny, one
+    string literal folded to an array-of-arrays); the argmin is a
+    native expression, so assignment is a pure map stage.
 
     ``dist_col`` additionally emits the L2 distance to the assigned
     centroid (same single map stage; the distance array is computed for
@@ -151,7 +156,7 @@ def ivf_assign(
     be an error rather than absent.
     """
     _refuse_assign_clash("ivf_assign", emb, dist_col)
-    cents = F.array(*[vector_literal(c) for c in centroids])
+    cents = matrix_literal(centroids)
     dists = F.transform(cents, lambda c: l2_distance_sq(F.col(vec_col), c))
     out = emb.withColumn(
         "cluster_id", F.array_position(dists, F.array_min(dists)).cast("int") - 1

@@ -222,6 +222,8 @@ def pq_adc_distance_expr(codebooks, query_vec, codes_col: str = "pq_codes"):
     inlined as a literal — each row then costs m array lookups + adds."""
     import numpy as np
 
+    from vector_db_setup_spark.functions.vector import matrix_literal
+
     q = np.asarray(query_vec, dtype=np.float64)
     m, ksub, dsub = codebooks.shape
     lut = np.stack(
@@ -230,30 +232,10 @@ def pq_adc_distance_expr(codebooks, query_vec, codes_col: str = "pq_codes"):
             for j in range(m)
         ]
     )  # (m, ksub) exact sub-distances
-    # one parsed literal (the nested F.array/F.lit form costs one py4j
-    # round trip per cell — m×ksub of them — per invocation). Non-finite
-    # LUT cells (a NaN/Inf in the query or codebooks, or a finite pair
-    # whose squared distance overflows to inf) have no plain SQL literal
-    # form — repr() would emit 'nanD'/'infD' and raise a ParseException
-    # at expression-BUILD time — so fall back to the per-cell F.lit
-    # builder, which propagates them through the data like the pre-r13
-    # form did (same guard as functions/vector.vector_literal).
-    if np.isfinite(lut).all():
-        lut_lit = F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(repr(float(x)) + "D" for x in row) + ")"
-                for row in lut
-            )
-            + ")"
-        )
-    else:
-        lut_lit = F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in row])
-                for row in lut
-            ]
-        )
+    # one string literal (functions/vector.matrix_literal): NaN/Inf
+    # cells — a non-finite query or codebook, or a squared distance
+    # that overflows — travel through it like any other value
+    lut_lit = matrix_literal(lut)
     # element_at is 1-based; codes are 0-based
     return F.aggregate(
         F.zip_with(

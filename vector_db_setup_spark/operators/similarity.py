@@ -899,90 +899,61 @@ def max_cosine_against_literal(
     shuffled. Ties on the 6-dp cosine break to the LOWEST benchmark
     id. Returns (id_col, nearest_benchmark_id, max_cosine).
 
-    The scoring expression is built as ONE parsed SQL string: the
-    per-bench ``F.lit``/lambda construction costs ~1300 py4j round
-    trips for a 20×64 benchmark (~1.9 s of driver wall per invocation,
-    profiled via the UI REST API — the Spark jobs themselves took
-    0.37 s), while one ``F.expr`` parse yields the same analyzed tree.
-    The corpus-vector norm is projected once (``__vnorm``) instead of
-    re-deriving the identical subexpression inside each of the N bench
-    terms — same double arithmetic, same values, N× less tree."""
+    The benchmark set ships as three one-string literals
+    (functions/vector: the n×d vectors, their n norms, their negated
+    ids), and one ``transform`` scores every benchmark vector: the
+    per-bench ``F.lit``/lambda construction cost ~1300 py4j round trips
+    for a 20×64 benchmark (~1.9 s of driver wall per invocation, while
+    the Spark jobs themselves took 0.37 s). Non-finite elements, and
+    finite ones whose norm overflows to inf, travel through the
+    literals like any other value. The corpus-vector norm is projected
+    once (``__vnorm``) instead of re-derived for each benchmark
+    vector."""
+    import json
     import math
 
-    sb = sorted(bench)
-    # element AND norm finiteness: finite elements can still overflow
-    # the sum-of-squares to inf (e.g. 1e200), and a non-finite bnorm
-    # has no SQL literal form ('infD' raises ParseException at BUILD
-    # time where the F.lit fallback propagates it through the data)
-    finite = all(
-        math.isfinite(float(x)) for _, bv in sb for x in bv
-    ) and all(
-        math.isfinite(math.sqrt(sum(float(x) * float(x) for x in bv)))
-        for _, bv in sb
+    from vector_db_setup_spark.functions.vector import (
+        matrix_literal,
+        vector_literal,
     )
-    if sb and finite:
-        v = f"`{vec_col}`"
-        norm_sql = (
-            f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x))"
-        )
-        terms = []
-        for bid, bv in sb:
-            vals = ",".join(repr(float(x)) + "D" for x in bv)
-            bnorm = math.sqrt(sum(float(x) * float(x) for x in bv))
-            terms.append(
-                f"struct(round(aggregate(zip_with({v}, array({vals}), "
-                "(x, y) -> x * y), 0.0D, (acc, x) -> acc + x) "
-                f"/ (`__vnorm` * {bnorm!r}D), 6) AS cos, "
-                f"{-int(bid)}L AS nbid)"
-            )
-        best = F.expr("array_max(array(" + ",".join(terms) + "))")
-        return (
-            df.withColumn("__vnorm", F.expr(norm_sql))
-            .select(id_col, best.alias("_best"))
-            .select(
-                id_col,
-                (-F.col("_best.nbid")).cast("long").alias(
-                    "nearest_benchmark_id"
-                ),
-                F.col("_best.cos").alias("max_cosine"),
-            )
-        )
 
-    # fallback (empty bench / non-finite elements, which have no plain
-    # SQL literal form): the original per-element builder
-    from vector_db_setup_spark.functions.vector import vector_literal
-
+    sb = sorted(bench)
+    vecs = matrix_literal([bv for _, bv in sb])
+    norms = vector_literal(
+        [math.sqrt(sum(float(x) * float(x) for x in bv)) for _, bv in sb]
+    )
+    nbids = F.from_json(
+        F.lit(json.dumps([-int(bid) for bid, _ in sb])), "array<bigint>"
+    )
     vc = F.col(vec_col)
-    norm = F.sqrt(F.aggregate(
+    vnorm = F.sqrt(F.aggregate(
         F.zip_with(vc, vc, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     ))
 
-    def _cos(bvec):
-        lit = vector_literal([float(x) for x in bvec])
+    def _scored(bv, i):
         dot = F.aggregate(
-            F.zip_with(vc, lit, lambda x, y: x * y),
+            F.zip_with(vc, bv, lambda x, y: x * y),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        bnorm = math.sqrt(sum(float(x) * float(x) for x in bvec))
-        return F.round(dot / (norm * F.lit(bnorm)), 6)
+        return F.struct(
+            F.round(
+                dot / (F.col("__vnorm") * F.element_at(norms, i + 1)), 6
+            ).alias("cos"),
+            F.element_at(nbids, i + 1).alias("nbid"),
+        )
 
-    best = F.array_max(
-        F.array(*[
-            F.struct(_cos(bv).alias("cos"), F.lit(-bid).alias("nbid"))
-            for bid, bv in sb
-        ])
-    )
-    return df.select(
-        id_col,
-        best.alias("_best"),
-    ).select(
-        id_col,
-        (-F.col("_best.nbid")).cast("long").alias(
-            "nearest_benchmark_id"
-        ),
-        F.col("_best.cos").alias("max_cosine"),
+    best = F.array_max(F.transform(vecs, _scored))
+    return (
+        df.withColumn("__vnorm", vnorm)
+        .select(id_col, best.alias("_best"))
+        .select(
+            id_col,
+            (-F.col("_best.nbid")).cast("long").alias(
+                "nearest_benchmark_id"
+            ),
+            F.col("_best.cos").alias("max_cosine"),
+        )
     )

@@ -296,10 +296,22 @@ def oracle_sql() -> dict[str, str]:
     return _ordered(_ORACLES)
 
 
-# bounded per-(sf_dir) query PARAMETERS: the KNN query vectors and the
+# per-(sf_dir) query PARAMETERS: the KNN query vectors and the
 # grid-sizing corpus count — scalars/1-row lookups that parameterize
-# plans, never query results
+# plans, never query results. Bounded like snapshot_table._SCHEMAS: at
+# _QVEC_MAX entries the oldest is dropped (a long-lived process sweeping
+# many fixture dirs must not grow it forever).
 _QVEC_CACHE: dict = {}
+_QVEC_MAX = 64
+
+
+def _qvec_memo(key, compute):
+    if key not in _QVEC_CACHE:
+        while len(_QVEC_CACHE) >= _QVEC_MAX:
+            _QVEC_CACHE.pop(next(iter(_QVEC_CACHE)))
+        _QVEC_CACHE[key] = compute()
+    return _QVEC_CACHE[key]
+
 
 # Memoized persist()ed intermediates, a WEAK-KEYED map session ->
 # {(sf_dir, tag): df}: repeated invocations of a query (bench
@@ -394,16 +406,17 @@ def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[flo
     collect. Memoized per (sf_dir, vec_id): fixtures are immutable, and
     the lookup otherwise costs one Spark job per KNN query.
     """
-    key = (sf_dir, vec_id)
-    if key not in _QVEC_CACHE:
+
+    def lookup():
         row = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == vec_id)
             .select("embedding")
             .first()
         )
-        _QVEC_CACHE[key] = [float(x) for x in row[0]]
-    return _QVEC_CACHE[key]
+        return [float(x) for x in row[0]]
+
+    return _qvec_memo((sf_dir, vec_id), lookup)
 
 
 # SQL fragment: the same query vector, DuckDB-side.
@@ -1771,10 +1784,8 @@ def embedding_similar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a PARALLELISM parameter, not a result — the global top-k is
     # provably B-invariant (oracle-checked) — and the sizing job
     # otherwise re-runs on every invocation.
-    key = (sf_dir, "emb_count")
-    if key not in _QVEC_CACHE:
-        _QVEC_CACHE[key] = emb.count()
-    pairs = cosine_topk_pairs_grid(emb, k=20, n_rows=_QVEC_CACHE[key])
+    n_rows = _qvec_memo((sf_dir, "emb_count"), emb.count)
+    pairs = cosine_topk_pairs_grid(emb, k=20, n_rows=n_rows)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
